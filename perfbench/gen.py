@@ -61,20 +61,15 @@ def gaussian_mixture(spec: VectorSpec, seed: int) -> tuple[np.ndarray, np.ndarra
     return x[: spec.n_base], x[spec.n_base :]
 
 
-def exact_topk(base: np.ndarray, queries: np.ndarray, k: int, metric: str) -> np.ndarray:
-    """Row indices of the exact top-k of each query, nearest first (float64)."""
+def exact_topk(base: np.ndarray, queries: np.ndarray, k: int) -> np.ndarray:
+    """Row indices of the exact cosine top-k of each query, nearest first (float64)."""
     b = base.astype(np.float64)
     q = queries.astype(np.float64)
-    if metric == "cosine":
-        bn = np.linalg.norm(b, axis=1)
-        qn = np.linalg.norm(q, axis=1)
-        b = b / np.where(bn == 0, 1.0, bn)[:, None]
-        q = q / np.where(qn == 0, 1.0, qn)[:, None]
-        d = -(q @ b.T)
-    elif metric == "l2":
-        d = (b * b).sum(axis=1)[None, :] - 2.0 * (q @ b.T)
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
+    bn = np.linalg.norm(b, axis=1)
+    qn = np.linalg.norm(q, axis=1)
+    b = b / np.where(bn == 0, 1.0, bn)[:, None]
+    q = q / np.where(qn == 0, 1.0, qn)[:, None]
+    d = -(q @ b.T)
     part = np.argpartition(d, k - 1, axis=1)[:, :k]
     order = np.argsort(np.take_along_axis(d, part, axis=1), axis=1, kind="stable")
     return np.take_along_axis(part, order, axis=1)

@@ -11,6 +11,7 @@ import os
 import threading
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+INTERVAL_S = 0.2
 
 
 def _tree_rss_bytes(root: int) -> int:
@@ -41,8 +42,7 @@ def _tree_rss_bytes(root: int) -> int:
 class PeakRss:
     """``with PeakRss() as p: ...`` then ``p.peak_mb``."""
 
-    def __init__(self, interval_s: float = 0.2):
-        self.interval_s = interval_s
+    def __init__(self):
         self.peak_bytes = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -51,7 +51,7 @@ class PeakRss:
         me = os.getpid()
         while True:
             self.peak_bytes = max(self.peak_bytes, _tree_rss_bytes(me))
-            if self._stop.wait(self.interval_s):
+            if self._stop.wait(INTERVAL_S):
                 return
 
     def __enter__(self) -> "PeakRss":

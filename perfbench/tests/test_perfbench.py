@@ -56,14 +56,11 @@ def test_documents_are_deterministic_per_seed_with_unique_ids():
 
 
 def test_exact_topk_on_a_tiny_input():
-    base = np.array([[0, 0], [1, 0], [0, 2], [5, 5], [-1, 0]], dtype=np.float32)
-    q = np.array([[0.9, 0.1], [4, 4]], dtype=np.float32)
-    assert gen.exact_topk(base, q, 3, "l2").tolist() == [[1, 0, 4], [3, 2, 1]]
-    # cosine: direction only; the zero vector sits at distance 1 from everything
-    cos = gen.exact_topk(base, np.array([[1, 0.01]], dtype=np.float32), 2, "cosine")
-    assert cos.tolist() == [[1, 3]]
-    with pytest.raises(ValueError):
-        gen.exact_topk(base, q, 1, "dot")
+    base = np.array([[1, 0], [0, 3], [2, 2], [-1, 0], [0, 0]], dtype=np.float32)
+    q = np.array([[1, 0.1], [0.1, -1]], dtype=np.float32)
+    # cosine: direction only, so [2, 2] is nearer to [1, 0.1] than [0, 3]
+    # is; the zero vector sits at distance 1 from everything
+    assert gen.exact_topk(base, q, 3).tolist() == [[0, 2, 1], [0, 4, 3]]
 
 
 def test_recall_and_pair_scores():
@@ -109,5 +106,5 @@ def test_code_reports_exactly_the_listed_metrics():
     got = run.layer_metrics(names, Run(Tracer(enabled=False, cores=4)), Tracer(False, 4),
                             (0.0, 1.0), 0.0, 4, 100.0)
     assert set(got) == set(names)
-    e2e = run.end_to_end([1.0, 2.0, 3.0], Outcome([4.0], 10.0, 2.0, 0.9), [0.5])
+    e2e = run.end_to_end(1.0, Outcome([4.0], 5.0, 0.9), [0.5])
     assert set(e2e) == {m["name"] for m in spec["end_to_end"]}
