@@ -95,6 +95,16 @@ def test_append_batch(spark, emb, queries, index):
     rows = knn_hnsw(appended, probe, k=3).filter(F.col("rnk") == 1).collect()
     assert rows and rows[0]["neighbor_id"] == rows[0]["query_id"]
 
+    # a single appended vector is a 1-node partition: no edges, so no
+    # meta row — both probes must still visit it and find it first
+    base = hnsw_build(synthetic_vectors(spark, 200, 16, seed=7), HnswParams(dim=16), num_partitions=4)
+    one = synthetic_vectors(spark, 1, 16, seed=8).select((F.col("id") + 10_000).alias("id"), "vec")
+    grown = base.append(one, num_partitions=1)
+    probe = one.select(F.col("id").alias("query_id"), F.col("vec").alias("query_vec"))
+    for knn in (knn_hnsw, knn_hnsw_distributed):
+        rows = knn(grown, probe, k=3).filter(F.col("rnk") == 1).collect()
+        assert [r["neighbor_id"] for r in rows] == [10_000], knn.__name__
+
 
 def test_delete_and_rebuild(spark, emb, queries, index):
     dl = emb.filter(F.col("vec_id") % 5 == 0).select(F.col("vec_id").alias("id"))

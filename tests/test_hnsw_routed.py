@@ -351,49 +351,73 @@ def test_append_routed_compacts_tombstones_in_touched_partitions(spark, emb):
     assert 5 not in got
 
 
-def test_delete_and_append_preserve_centroid_routing(spark, emb, queries):
-    """delete()/append() must carry routing/assign_n/centroids through to
-    the new handle: losing them silently falls back to routing='lsh', so
-    a centroid-placed index would be probed with LSH routing (recall
-    collapses with no error) and rebuild() would re-train under the
-    wrong family. Pin recall through delete()+probe at P=64, the setting
-    where misrouting is catastrophic."""
+LAYOUT = ("num_partitions", "routed", "n_planes", "replicas", "routing", "assign_n")
+
+
+@pytest.mark.parametrize("routing", ["centroid", "lsh"])
+def test_delete_and_append_preserve_centroid_routing(spark, emb, queries, routing):
+    """delete()/append()/append_routed() must carry every layout field
+    through to the new handle: losing routing/assign_n/centroids
+    silently falls back to routing='lsh', so a centroid-placed index
+    would be probed with LSH routing (recall collapses with no error)
+    and rebuild() would re-train under the wrong family. Pin recall
+    through delete()+probe at P=64, the setting where misrouting is
+    catastrophic for the centroid family."""
+    from vectorsearch_with_hnsw_spark.index.routed import append_routed
     from vectorsearch_with_hnsw_spark.operators.knn import knn_exact
 
     src = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     idx = hnsw_build_routed(
-        src, HnswParams(dim=DIM, metric="cosine"), num_partitions=64
+        src, HnswParams(dim=DIM, metric="cosine"), num_partitions=64, routing=routing
     )
-    assert idx.routing == "centroid"
+    assert idx.routing == routing
+    layout = {f: getattr(idx, f) for f in LAYOUT}
+
+    def assert_layout(h):
+        assert {f: getattr(h, f) for f in LAYOUT} == layout
+        assert h.centroids is idx.centroids
+
     # delete an id far from the query block so exact top-10 is unchanged
     after_del = idx.delete(spark.createDataFrame([(1900,)], "id long"))
-    assert after_del.routing == "centroid"
-    assert after_del.assign_n == idx.assign_n
-    assert after_del.centroids is not None
+    assert_layout(after_del)
+    assert after_del.appended_partitions == []
+    if routing == "centroid":
+        assert after_del.assign_n == idx.assign_n
+        assert after_del.centroids is not None
     got = {
         (r["query_id"], r["neighbor_id"])
         for r in knn_hnsw_routed(after_del, queries, k=10).collect()
     }
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in knn_exact(
-            emb.filter(F.col("vec_id") != 1900), queries, k=10, metric="cosine"
-        ).collect()
-    }
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.85, f"post-delete routed recall {recall}"
     assert not any(n == 1900 for _, n in got)
-    # append: routing family survives too, and rebuild() re-trains under
-    # the centroid family (not LSH)
-    after_app = after_del.append(
-        emb.filter(F.col("vec_id") >= 1990).filter(F.col("vec_id") < 1995),
-        num_partitions=1,
-        id_col="vec_id",
-        vec_col="embedding",
-    )
-    assert after_app.routing == "centroid" and after_app.centroids is not None
+    if routing == "centroid":
+        exact = {
+            (r["query_id"], r["neighbor_id"])
+            for r in knn_exact(
+                emb.filter(F.col("vec_id") != 1900), queries, k=10, metric="cosine"
+            ).collect()
+        }
+        recall = len(got & exact) / len(exact)
+        assert recall >= 0.85, f"post-delete routed recall {recall}"
+    # append: the layout survives, only appended_partitions grows, and
+    # rebuild() re-trains under the same family
+    batch = emb.filter(F.col("vec_id") >= 1990).filter(F.col("vec_id") < 1995)
+    after_app = after_del.append(batch, num_partitions=1, id_col="vec_id", vec_col="embedding")
+    assert_layout(after_app)
+    assert len(after_app.appended_partitions) == 1
+    assert after_del.appended_partitions == []
+    assert after_app.routing == routing
+    if routing == "centroid":
+        assert after_app.centroids is not None
     rebuilt = after_app.rebuild()
-    assert rebuilt.routing == "centroid" and rebuilt.centroids is not None
+    assert rebuilt.routing == routing
+    if routing == "centroid":
+        assert rebuilt.centroids is not None
+    # append_routed places into the existing layout: nothing appended,
+    # and the handle exposes the kernel output it persisted
+    routed_app = append_routed(after_del, batch, id_col="vec_id", vec_col="embedding")
+    assert_layout(routed_app)
+    assert routed_app.appended_partitions == []
+    assert routed_app.kernel_out is not None and routed_app.kernel_out is not idx.kernel_out
 
 
 def test_centroid_train_empty_corpus(spark):

@@ -50,6 +50,24 @@ def test_load_or_build_caching(spark, sf_smoke, tmp_path):
     assert b.edges.count() == n_edges
     assert b.nodes.count() == 100
 
+    # an index that exists but cannot be read must raise, never be
+    # silently rebuilt over: corrupt the params sidecar and retry
+    import glob
+    import os
+
+    sidecars = glob.glob(os.path.join(path, "params", "part-*"))
+    assert sidecars
+    for f in sidecars:
+        with open(f, "w") as fh:
+            fh.write("{not json")
+    before = sorted(os.listdir(path))
+    with pytest.raises(Exception):
+        load_or_build(spark, path, vecs, HnswParams(dim=16), num_partitions=2)
+    assert sorted(os.listdir(path)) == before
+    for f in sidecars:
+        with open(f) as fh:
+            assert fh.read() == "{not json"
+
 
 # -- hypothesis: expression semantics vs numpy ground truth --------------
 

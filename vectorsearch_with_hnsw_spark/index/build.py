@@ -17,6 +17,13 @@ reference's vectors.npy / graph.json / meta.json, hsnw_trial.py:310-342):
   edges(partition, layer, src, dst)
   meta (partition, entry_point, max_layer) + params as a JSON column
 
+Kernel boundary: ``_build_tables`` is the one place the build kernel
+runs. Every builder (``hnsw_build`` here; ``hnsw_build_routed`` and
+``append_routed`` in index.routed) only decides placement — it
+computes an (id, vec, partition) frame and hands it over. The probe
+side has the same shape in index.query (``_probe_placed`` /
+``_merge_topk``).
+
 Scale notes: partition count P scales with data (vectors per partition
 bounded by executor memory); the build is one shuffle (repartition by
 hash(id)) followed by embarrassingly-parallel kernels; no driver-side
@@ -25,9 +32,9 @@ state at any point.
 
 from __future__ import annotations
 
+import copy
 import json
 from dataclasses import asdict
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +47,7 @@ from ..cache import persist_tracked
 NODES_SCHEMA = "partition int, id long, vec array<float>, level int, deleted boolean"
 EDGES_SCHEMA = "partition int, layer int, src long, dst long"
 META_SCHEMA = "partition int, entry_point long, max_layer int, n_nodes long"
+_KERNEL_SCHEMA = EDGES_SCHEMA + ", entry_point long, max_layer int"
 
 
 class HnswIndex:
@@ -95,7 +103,23 @@ class HnswIndex:
         self.routing = routing if routing else ("lsh" if routed else None)
         self.assign_n = int(assign_n)
         self.centroids = centroids
-        self.kernel_out: DataFrame | None = None  # set by hnsw_build
+        # the persisted kernel output of the call that ran the build
+        # kernel (see _build_tables), so callers (bench, repeated
+        # rebuilds) can release exactly this cache entry — edges/meta
+        # are projections of it and unpersisting those is a no-op
+        self.kernel_out: DataFrame | None = None
+
+    def _with_tables(self, **changes) -> "HnswIndex":
+        """A new handle with the given tables (``nodes``, ``edges``,
+        ``meta``, ``kernel_out``, ``appended_partitions``) swapped in and
+        every layout field — modulus, placement, routing family,
+        centroids — carried over unchanged. Dropping e.g. ``routing``
+        would default a centroid-placed index back to LSH routing (recall
+        collapses with no error), so derived handles are made only here."""
+        new = copy.copy(self)
+        vars(new).update(changes)
+        new.appended_partitions = list(new.appended_partitions)
+        return new
 
     def save(self, path: str) -> None:
         """Persist as Parquet tables + params sidecar (logical equivalent
@@ -169,21 +193,7 @@ class HnswIndex:
             .withColumn("deleted", F.col("deleted") | F.col("_del_id").isNotNull())
             .drop("_del_id")
         )
-        return HnswIndex(
-            nodes, self.edges, self.meta, self.params,
-            num_partitions=self.num_partitions,
-            appended_partitions=self.appended_partitions,
-            routed=self.routed,
-            n_planes=self.n_planes,
-            replicas=self.replicas,
-            # routing family + artifacts MUST survive: without them the
-            # constructor defaults a routed index back to routing='lsh',
-            # and a centroid-placed layout would be probed with LSH
-            # routing (recall collapses with no error)
-            routing=self.routing,
-            assign_n=self.assign_n,
-            centroids=self.centroids,
-        )
+        return self._with_tables(nodes=nodes)
 
     def rebuild(self, num_partitions: int | None = None) -> "HnswIndex":
         """Compaction: rebuild from the alive subset only (reference
@@ -208,8 +218,8 @@ class HnswIndex:
                 alive, self.params, num_partitions=nparts,
                 n_planes=int(self.n_planes or 8),
                 replicas=self.replicas,
-                routing=self.routing or "lsh",
-                assign_n=int(getattr(self, "assign_n", 2) or 2),
+                routing=self.routing,
+                assign_n=self.assign_n,
             )
         return hnsw_build(alive, self.params, num_partitions=nparts)
 
@@ -245,24 +255,13 @@ class HnswIndex:
         fresh = hnsw_build(vectors_df, self.params, num_partitions=num_partitions,
                            id_col=id_col, vec_col=vec_col)
         shift = lambda df: df.withColumn("partition", (F.col("partition") + F.lit(offset)).cast("int"))  # noqa: E731
-        return HnswIndex(
-            self.nodes.unionByName(shift(fresh.nodes)),
-            self.edges.unionByName(shift(fresh.edges)),
-            self.meta.unionByName(shift(fresh.meta)),
-            self.params,
-            num_partitions=self.num_partitions,
+        return self._with_tables(
+            nodes=self.nodes.unionByName(shift(fresh.nodes)),
+            edges=self.edges.unionByName(shift(fresh.edges)),
+            meta=self.meta.unionByName(shift(fresh.meta)),
+            kernel_out=fresh.kernel_out,
             appended_partitions=self.appended_partitions
             + [int(offset) + i for i in range(num_partitions)],
-            routed=self.routed,
-            n_planes=self.n_planes,
-            replicas=self.replicas,
-            # preserve the routing family (see delete()): the appended
-            # tail is hash-placed and probed unconditionally, but the
-            # ORIGINAL build partitions must keep being routed by the
-            # family that placed them
-            routing=self.routing,
-            assign_n=self.assign_n,
-            centroids=self.centroids,
         )
 
 
@@ -275,13 +274,19 @@ def load_or_build(
 ) -> HnswIndex:
     """Reuse a persisted index if present, else build and save — the
     reference's try-load / except-build caching pattern (CIFAR notebook
-    cell 5)."""
-    try:
-        return HnswIndex.load(spark, path)
-    except Exception:
-        idx = hnsw_build(vectors_df, params, num_partitions=num_partitions)
-        idx.save(path)
-        return HnswIndex.load(spark, path)
+    cell 5). Only a missing path triggers a build: an index that exists
+    but fails to load raises instead of being silently overwritten."""
+    if not _path_exists(spark, path):
+        hnsw_build(vectors_df, params, num_partitions=num_partitions).save(path)
+    return HnswIndex.load(spark, path)
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop filesystem API, so the check sees the
+    same store (local, HDFS, object store) the Parquet writer targets."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(hpath)
 
 
 def hnsw_build(
@@ -298,20 +303,32 @@ def hnsw_build(
     ids (order-independent), so the result is deterministic under any
     cluster layout.
     """
-    pickled = params  # dataclass is picklable into the closure
-
     src = vectors_df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<float>").alias("vec"),
         (F.pmod(F.hash(F.col(id_col)), F.lit(num_partitions))).alias("partition"),
     )
+    nodes, edges, meta, kernel_out = _build_tables(src, params)
+    idx = HnswIndex(nodes, edges, meta, params, num_partitions=num_partitions)
+    idx.kernel_out = kernel_out
+    return idx
+
+
+def _build_tables(
+    src: DataFrame, params: HnswParams
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The build kernel boundary: an (id, vec, partition) frame in,
+    ``(nodes, edges, meta, kernel_out)`` out. One groupBy shuffle, then
+    one local graph per partition inside ``applyInPandas`` (Arrow batch
+    in, flat edge arrays out). ``kernel_out`` is the persisted kernel
+    output; edges and meta are both projections of it, so the kernel
+    runs once. Partitions of 0/1 nodes emit no edges and hence no meta
+    row — the probe kernel falls back to the highest-level node."""
 
     def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(pdf["partition"].iloc[0])
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float32)
-        idx = LocalHNSW(pickled)
-        idx.add_batch(ids, mat)
+        idx = LocalHNSW(params)
+        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
         layer, s, t = idx.edges()
         return pd.DataFrame(
             {
@@ -324,34 +341,24 @@ def hnsw_build(
             }
         )
 
-    edges_raw = src.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
+    kernel_out = (
+        src.groupBy("partition").applyInPandas(build_partition, _KERNEL_SCHEMA)
+        .transform(persist_tracked)
     )
-    # Cache the kernel output: edges + meta both derive from it, and at
-    # scale you'd rather not run the build twice.
-    edges_raw = edges_raw.transform(persist_tracked)
-    edges = edges_raw.select("partition", "layer", "src", "dst")
-    meta = (
-        edges_raw.groupBy("partition")
-        .agg(
-            F.first("entry_point").alias("entry_point"),
-            F.first("max_layer").alias("max_layer"),
-            F.countDistinct("src").alias("n_nodes"),
-        )
+    edges = kernel_out.select("partition", "layer", "src", "dst")
+    meta = kernel_out.groupBy("partition").agg(
+        F.first("entry_point").alias("entry_point"),
+        F.first("max_layer").alias("max_layer"),
+        F.countDistinct("src").alias("n_nodes"),
     )
     nodes = src.select(
         "partition",
         "id",
         "vec",
-        _level_expr(F.col("id"), pickled).alias("level"),
+        _level_expr(F.col("id"), params).alias("level"),
         F.lit(False).alias("deleted"),
     )
-    idx = HnswIndex(nodes, edges, meta, params, num_partitions=num_partitions)
-    # the persisted kernel output, exposed so callers (bench, repeated
-    # rebuilds) can release exactly this cache entry — edges/meta are
-    # projections of it and unpersisting those is a no-op
-    idx.kernel_out = edges_raw
-    return idx
+    return nodes, edges, meta, kernel_out
 
 
 def _level_expr(id_col, params: HnswParams):

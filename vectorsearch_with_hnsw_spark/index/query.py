@@ -1,14 +1,22 @@
 """Distributed ANN probe over a partitioned HNSW index.
 
-Query path (SURVEY.md §7 P4): every index partition is probed by a local
-kernel reconstructed from the nodes+edges tables (cogrouped
-``applyInPandas`` — one Arrow exchange per partition), each emitting its
-per-partition top-k per query; a final tiny Window re-merge produces the
-global top-k. Shuffle volume of the merge is O(P * Q * k) — independent
-of index size, so the plan survives a 100x scale-up (P grows, per-task
-work stays constant).
+Query path (SURVEY.md §7 P4): each index partition that receives queries
+is probed by a local kernel reconstructed from the nodes+edges tables
+(cogrouped ``applyInPandas`` — one Arrow exchange per partition), each
+emitting its per-partition top-k per query; a final tiny Window re-merge
+produces the global top-k. Shuffle volume of the merge is O(P * Q * k) —
+independent of index size, so the plan survives a 100x scale-up (P
+grows, per-task work stays constant).
 
-Queries are broadcast (bounded artifact — same rule as the label join).
+Queries reach the kernel one of two ways. ``knn_hnsw`` collects and
+broadcasts the batch (bounded artifact — same rule as the label join),
+so every partition probes every query. ``_probe_placed`` cogroups query
+rows that already carry a ``partition`` with the index nodes:
+``knn_hnsw_distributed`` places each query on every partition (build
+modulus plus the appended tail), index.routed.knn_hnsw_routed on its
+routed candidate set only. Both run ``_probe_partition`` per partition
+and ``_merge_topk`` over the partial results.
+
 Semantics match the reference search (hsnw_trial.py:267-294): greedy
 descent, ef-search at layer 0 with ef = max(ef, k), tombstones skipped,
 results ascending, k-truncated.
@@ -23,7 +31,125 @@ from pyspark.sql import functions as F
 
 from ..operators.knn import topk_per_group
 from .build import HnswIndex
-from .local_hnsw import LocalHNSW
+from .local_hnsw import HnswParams, LocalHNSW
+
+_PROBE_SCHEMA = "query_id long, neighbor_id long, dist double"
+_EMPTY_PROBE = pd.DataFrame(
+    {"query_id": pd.Series(dtype="int64"), "neighbor_id": pd.Series(dtype="int64"),
+     "dist": pd.Series(dtype="float64")}
+)
+
+
+def _broadcast_meta(index: HnswIndex):
+    """partition -> (entry_point, max_layer), broadcast once per probe.
+    Partitions without a meta row (0/1 nodes, no edges) are absent; the
+    kernel falls back to their highest-level node."""
+    meta_rows = {
+        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
+        for r in index.meta.collect()
+    }
+    return index.nodes.sparkSession.sparkContext.broadcast(meta_rows)
+
+
+def _probe_partition(
+    params: HnswParams,
+    meta: dict,
+    nodes_pdf: pd.DataFrame,
+    edges_pdf: pd.DataFrame,
+    qids,
+    qvecs,
+    k: int,
+    ef: int | None,
+) -> pd.DataFrame:
+    """The probe kernel boundary: rebuild one partition's local graph from
+    its table rows and search it for every given query."""
+    part = int(nodes_pdf["partition"].iloc[0])
+    entry_point, max_layer = meta.get(part, (None, -1))
+    idx = LocalHNSW.from_tables(
+        params,
+        nodes_pdf["id"].to_numpy(dtype=np.int64),
+        np.array(list(nodes_pdf["vec"]), dtype=np.float32),
+        nodes_pdf["level"].to_numpy(dtype=np.int32),
+        nodes_pdf["deleted"].to_numpy(dtype=bool),
+        edges_pdf["layer"].to_numpy(dtype=np.int32),
+        edges_pdf["src"].to_numpy(dtype=np.int64),
+        edges_pdf["dst"].to_numpy(dtype=np.int64),
+        entry_point,
+        max_layer,
+    )
+    out_q, out_n, out_d = [], [], []
+    for qid, qv in zip(qids, qvecs):
+        for nid, d in idx.search(qv, k=k, ef=ef):
+            out_q.append(qid)
+            out_n.append(nid)
+            out_d.append(d)
+    return pd.DataFrame(
+        {
+            "query_id": np.array(out_q, dtype=np.int64),
+            "neighbor_id": np.array(out_n, dtype=np.int64),
+            "dist": np.array(out_d, dtype=np.float64),
+        }
+    )
+
+
+def _merge_topk(partial: DataFrame, k: int) -> DataFrame:
+    """Global top-k from per-partition top-k rows.
+
+    dropDuplicates: a replicated routed layout (or probe-all over it)
+    surfaces the same (query, neighbor) hit from several partitions with
+    identical dist; keep one before ranking so replicas never crowd
+    distinct neighbors out of the top-k. The partial frame is O(P*Q*k) —
+    the dedup shuffle is tiny and shares the window key."""
+    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
+    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "dist", "rnk"
+    )
+
+
+def _probe_placed(index: HnswIndex, placed: DataFrame, k: int, ef: int | None) -> DataFrame:
+    """Probe with query rows already placed on partitions: ``placed`` is
+    (partition, id, vec), one row per (query, target partition). The
+    query rows ride the nodes' cogroup, tagged by a marker column, so no
+    query is ever collected to the driver. Shuffle volume: the placed
+    rows + one pass of the index tables; the merge stays O(P * Q * k)."""
+    params = index.params
+    tagged = index.nodes.select(
+        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
+    ).unionByName(
+        placed.select(
+            "partition", "id", "vec", F.lit(0).alias("level"), F.lit(False).alias("deleted"),
+            F.lit(True).alias("is_query"),
+        )
+    )
+    bmeta = _broadcast_meta(index)
+
+    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
+        nodes_pdf = mixed_pdf[~is_q]
+        queries_pdf = mixed_pdf[is_q]
+        if len(nodes_pdf) == 0 or len(queries_pdf) == 0:
+            return _EMPTY_PROBE
+        return _probe_partition(
+            params, bmeta.value, nodes_pdf, edges_pdf,
+            queries_pdf["id"].to_numpy(dtype=np.int64), queries_pdf["vec"], k, ef,
+        )
+
+    partial = (
+        tagged.groupBy("partition")
+        .cogroup(index.edges.groupBy("partition"))
+        .applyInPandas(probe, _PROBE_SCHEMA)
+    )
+    return _merge_topk(partial, k)
+
+
+def _query_rows(queries_df: DataFrame, query_id_col: str, query_vec_col: str, *extra) -> DataFrame:
+    """(id long, vec array<float>, *extra) — the query side of
+    ``_probe_placed``; ``extra`` usually places each row on partitions."""
+    return queries_df.select(
+        F.col(query_id_col).cast("long").alias("id"),
+        F.col(query_vec_col).cast("array<float>").alias("vec"),
+        *extra,
+    )
 
 
 def knn_hnsw_distributed(
@@ -37,94 +163,22 @@ def knn_hnsw_distributed(
     """Probe with NO driver-side query collection — the path for query
     batches too large to broadcast (millions of rows at 100 TB scale).
 
-    Queries are replicated across index partitions by an explode join
-    (each query visits every partition, exactly the probe-all contract),
-    then ride the same cogroup as the index nodes, tagged by a marker
-    column. Shuffle volume: |Q| * P query rows + one pass of the index
-    tables; the merge stays O(P * Q * k).
-    """
-    params = index.params
-    parts = index.meta.select("partition")
-    q_rep = queries_df.select(
-        F.col(query_id_col).alias("id"),
-        F.col(query_vec_col).cast("array<float>").alias("vec"),
-    ).crossJoin(F.broadcast(parts))
-    tagged_nodes = index.nodes.select(
-        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
-    ).unionByName(
-        q_rep.select(
-            "partition",
-            "id",
-            "vec",
-            F.lit(0).alias("level"),
-            F.lit(False).alias("deleted"),
-            F.lit(True).alias("is_query"),
-        )
+    Each query is exploded onto every partition the index holds: the
+    build modulus ``range(num_partitions)`` plus ``appended_partitions``
+    (the set the handle records; meta is used only for a handle without
+    a recorded modulus). Meta alone would miss partitions of 0/1 nodes,
+    which have no edges and so no meta row. Results equal ``knn_hnsw``'s
+    (same kernel, same merge)."""
+    if index.num_partitions is None:
+        built = [int(r["partition"]) for r in index.meta.select("partition").collect()]
+    else:
+        built = range(index.num_partitions)
+    parts = sorted(set(built) | set(index.appended_partitions))
+    placed = _query_rows(
+        queries_df, query_id_col, query_vec_col,
+        F.explode(F.array(*[F.lit(p) for p in parts]).cast("array<int>")).alias("partition"),
     )
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    spark = index.nodes.sparkSession
-    bmeta = spark.sparkContext.broadcast(meta_rows)
-
-    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"), "neighbor_id": pd.Series(dtype="int64"),
-             "dist": pd.Series(dtype="float64")}
-        )
-        if len(mixed_pdf) == 0:
-            return empty
-        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
-        nodes_pdf = mixed_pdf[~is_q]
-        queries_pdf = mixed_pdf[is_q]
-        if len(nodes_pdf) == 0 or len(queries_pdf) == 0:
-            return empty
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(
-            queries_pdf["id"].to_numpy(dtype=np.int64),
-            queries_pdf["vec"],
-        ):
-            for nid, d in idx.search(np.asarray(qv, dtype=np.float32), k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
-
-    partial = (
-        tagged_nodes.groupBy("partition")
-        .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
-    )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return _probe_placed(index, placed, k, ef)
 
 
 def knn_hnsw(
@@ -177,62 +231,20 @@ def knn_hnsw(
     qrows = queries_df.select(query_id_col, query_vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    spark = index.nodes.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat))
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    bmeta = spark.sparkContext.broadcast(meta_rows)
+    bq = index.nodes.sparkSession.sparkContext.broadcast((qids, qmat))
+    bmeta = _broadcast_meta(index)
 
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(nodes_pdf) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []}).astype(
-                {"query_id": np.int64, "neighbor_id": np.int64, "dist": np.float64}
-            )
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        ids_b, qm = bq.value
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(ids_b, qm):
-            for nid, d in idx.search(qv, k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
+            return _EMPTY_PROBE
+        return _probe_partition(params, bmeta.value, nodes_pdf, edges_pdf, *bq.value, k, ef)
 
     partial = (
         index.nodes.groupBy("partition")
         .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
+        .applyInPandas(probe, _PROBE_SCHEMA)
     )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return _merge_topk(partial, k)
 
 
 def knn_hnsw_rescored(

@@ -30,15 +30,13 @@ further with NN-descent rounds.
 from __future__ import annotations
 
 import numpy as np
-
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ann import hyperplane_ints, lsh_bucket
-from ..operators.knn import topk_per_group
-from .build import EDGES_SCHEMA, HnswIndex, HnswParams
-from .local_hnsw import LocalHNSW
-from ..cache import persist_tracked
+from .build import HnswIndex, HnswParams, _build_tables
+from .query import _probe_placed, _query_rows
 
 
 def default_n_probe(num_partitions: int) -> int:
@@ -133,8 +131,6 @@ def _assign_centroid_partitions(
     ``assign_n`` nearest cells — the centroid twin of the LSH
     multi-assignment projection. One broadcast + one Arrow map pass;
     no shuffle here (the build's groupBy supplies it)."""
-    import pandas as pd
-
     spark = vectors_df.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
 
@@ -205,6 +201,32 @@ def _assignment_exprs(
     return dots, bucket, parts
 
 
+def _assign_lsh_partitions(
+    vectors_df: DataFrame,
+    dim: int,
+    n_planes: int,
+    num_partitions: int,
+    replicas: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, vec float32, partition) with each vector exploded to its home
+    LSH bucket plus its ``replicas`` flip buckets (mod P) — the LSH twin
+    of ``_assign_centroid_partitions``. Narrow: no shuffle here."""
+    dots, bucket, parts = _assignment_exprs(
+        f"cast(`{vec_col}` as array<double>)", dim, n_planes, num_partitions, replicas
+    )
+    return (
+        vectors_df.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(vec_col).cast("array<float>").alias("vec"),
+            F.expr(dots).alias("_dots"),
+        )
+        .withColumn("_bucket", F.expr(bucket))
+        .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
+    )
+
+
 def hnsw_build_routed(
     vectors_df: DataFrame,
     params: HnswParams,
@@ -230,12 +252,8 @@ def hnsw_build_routed(
     restores the single-home layout). Either way the probe merge
     deduplicates (query, neighbor) pairs, so results are
     replication-independent."""
-    import numpy as np
-    import pandas as pd
-
     if routing not in ("centroid", "lsh"):
         raise ValueError(f"unknown routing {routing!r}; expected 'centroid' or 'lsh'")
-    pickled = params
     centroids_df = None
     if routing == "centroid":
         C = _train_centroids(vectors_df, num_partitions, id_col, vec_col, dim=params.dim)
@@ -246,58 +264,16 @@ def hnsw_build_routed(
             "cell int, centroid array<double>",
         )
     else:
-        dots, bucket, parts = _assignment_exprs(
-            f"cast(`{vec_col}` as array<double>)",
-            params.dim,
-            n_planes,
-            num_partitions,
-            replicas,
+        src = _assign_lsh_partitions(
+            vectors_df, params.dim, n_planes, num_partitions, replicas, id_col, vec_col
         )
-        src = (
-            vectors_df.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<float>").alias("vec"),
-                F.expr(dots).alias("_dots"),
-            )
-            .withColumn("_bucket", F.expr(bucket))
-            .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
-        )
-
-    def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
-        idx = LocalHNSW(pickled)
-        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
-        layer, s, t = idx.edges()
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(layer), part, dtype=np.int32),
-                "layer": layer,
-                "src": s,
-                "dst": t,
-                "entry_point": np.full(len(layer), idx.ids[idx.entry_point], dtype=np.int64),
-                "max_layer": np.full(len(layer), idx.max_layer, dtype=np.int32),
-            }
-        )
-
-    edges_raw = src.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
-    ).transform(persist_tracked)
-    edges = edges_raw.select("partition", "layer", "src", "dst")
-    meta = edges_raw.groupBy("partition").agg(
-        F.first("entry_point").alias("entry_point"),
-        F.first("max_layer").alias("max_layer"),
-        F.countDistinct("src").alias("n_nodes"),
-    )
-    from .build import _level_expr
-
-    nodes = src.select(
-        "partition", "id", "vec", _level_expr(F.col("id"), pickled).alias("level"), F.lit(False).alias("deleted")
-    )
+    nodes, edges, meta, kernel_out = _build_tables(src, params)
     idx = HnswIndex(
         nodes, edges, meta, params, num_partitions=num_partitions,
         routed=True, n_planes=n_planes, replicas=replicas,
         routing=routing, assign_n=assign_n, centroids=centroids_df,
     )
+    idx.kernel_out = kernel_out
     if routing == "centroid":
         # seed the probe-side cache — the build already holds C
         idx._centroids_np = (C, np.arange(len(C), dtype=np.int32))
@@ -366,33 +342,24 @@ def knn_hnsw_routed(
     over hash placement silently probes partitions unrelated to the
     query's true neighbors — at large P recall collapses with no
     error. Use ``knn_hnsw`` (probe-all) for hash-placed indexes."""
-    import numpy as np
-    import pandas as pd
-
-    if not getattr(index, "routed", False):
+    if not index.routed:
         raise ValueError(
             "knn_hnsw_routed requires an index built by hnsw_build_routed "
             "(routed placement); this index is hash-placed — use knn_hnsw "
             "(probe-all) or rebuild with hnsw_build_routed"
         )
-    params = index.params
     # route with the BUILD modulus: meta.count() undercounts when a
     # build partition carried 0/1 nodes (no edges -> no meta row), and a
     # wrong modulus silently routes queries away from their home bucket
     num_partitions = index.num_partitions
     if num_partitions is None:
         num_partitions = index.meta.count()
-    appended = getattr(index, "appended_partitions", None) or []
-    routing = getattr(index, "routing", None) or "lsh"
-    if routing == "centroid":
+    appended = index.appended_partitions
+    if index.routing == "centroid":
         C, cell_ids = _centroids_np(index)
         R = int(n_probe) if n_probe is not None else default_n_probe(int(num_partitions))
         spark = queries_df.sparkSession
         bc = spark.sparkContext.broadcast((C, cell_ids, np.array(appended, dtype=np.int32)))
-        nq = queries_df.select(
-            F.col(query_id_col).cast("long").alias("id"),
-            F.col(query_vec_col).cast("array<float>").alias("vec"),
-        )
 
         def route_q(it):
             Cv, cells_v, app_v = bc.value
@@ -419,94 +386,26 @@ def knn_hnsw_routed(
                     }
                 )
 
-        routed = nq.mapInPandas(route_q, "id long, vec array<float>, partition int")
+        placed = _query_rows(queries_df, query_id_col, query_vec_col).mapInPandas(
+            route_q, "id long, vec array<float>, partition int"
+        )
     else:
         # route with the BUILD's plane count: a query hashed with a
         # different hyperplane set than the build lands in an unrelated
         # bucket (explicit arg still wins for experiments)
         if n_planes is None:
-            n_planes = int(getattr(index, "n_planes", None) or 8)
+            n_planes = int(index.n_planes or 8)
         route = route_partitions(
-            f"cast(`{query_vec_col}` as array<double>)", params.dim, int(num_partitions), n_planes
+            f"cast(`{query_vec_col}` as array<double>)", index.params.dim, int(num_partitions), n_planes
         )
         if appended:
             route = F.array_distinct(
                 F.concat(route, F.array(*[F.lit(int(p)).cast("int") for p in appended]))
             )
-        routed = queries_df.select(
-            F.col(query_id_col).alias("id"),
-            F.col(query_vec_col).cast("array<float>").alias("vec"),
-            F.explode(route).alias("partition"),
+        placed = _query_rows(
+            queries_df, query_id_col, query_vec_col, F.explode(route).alias("partition")
         )
-    tagged = index.nodes.select(
-        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
-    ).unionByName(
-        routed.select(
-            "partition", "id", "vec", F.lit(0).alias("level"), F.lit(False).alias("deleted"),
-            F.lit(True).alias("is_query"),
-        )
-    )
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    spark = index.nodes.sparkSession
-    bmeta = spark.sparkContext.broadcast(meta_rows)
-
-    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"), "neighbor_id": pd.Series(dtype="int64"),
-             "dist": pd.Series(dtype="float64")}
-        )
-        if len(mixed_pdf) == 0:
-            return empty
-        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
-        nodes_pdf = mixed_pdf[~is_q]
-        queries_pdf = mixed_pdf[is_q]
-        if len(nodes_pdf) == 0 or len(queries_pdf) == 0:
-            return empty
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(queries_pdf["id"].to_numpy(dtype=np.int64), queries_pdf["vec"]):
-            for nid, d in idx.search(np.asarray(qv, dtype=np.float32), k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
-
-    partial = (
-        tagged.groupBy("partition")
-        .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
-    )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return _probe_placed(index, placed, k, ef)
 
 
 def append_routed(
@@ -533,49 +432,32 @@ def append_routed(
 
     The whole update is declarative: one assignment projection over the
     batch, one distinct on its partition ids (bounded by P), an
-    anti-join split of the old tables, and the same cogrouped
-    applyInPandas kernel as the build over the touched slice. Returns a
-    new handle; tables are immutable as everywhere else."""
-    import numpy as np
-    import pandas as pd
-
-    if not getattr(index, "routed", False):
+    anti-join split of the old tables, and the build's own
+    ``_build_tables`` over the touched slice (its ``kernel_out`` is
+    exposed on the returned handle). Returns a new handle; tables are
+    immutable as everywhere else."""
+    if not index.routed:
         raise ValueError(
             "append_routed requires a routed-built index; use "
             "HnswIndex.append for hash-placed indexes"
         )
-    params = index.params
-    pickled = params
-    num_partitions = int(index.num_partitions or index.meta.count())
-    n_planes = int(index.n_planes or 8)
-    replicas = int(getattr(index, "replicas", 0))
-    routing = getattr(index, "routing", None) or "lsh"
-    if routing == "centroid":
+    if index.routing == "centroid":
         # place the batch with the index's OWN trained centroids (no
         # retraining — standard IVF behavior; rebuild() re-trains)
         C, _ = _centroids_np(index)
-        fresh = _assign_centroid_partitions(
-            vectors_df, C, int(getattr(index, "assign_n", 2) or 2), id_col, vec_col
-        )
+        fresh = _assign_centroid_partitions(vectors_df, C, index.assign_n, id_col, vec_col)
     else:
-        dots, bucket, parts = _assignment_exprs(
-            f"cast(`{vec_col}` as array<double>)",
-            params.dim,
-            n_planes,
-            num_partitions,
-            replicas,
+        fresh = _assign_lsh_partitions(
+            vectors_df,
+            index.params.dim,
+            int(index.n_planes or 8),
+            int(index.num_partitions or index.meta.count()),
+            index.replicas,
+            id_col,
+            vec_col,
         )
-        fresh = (
-            vectors_df.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<float>").alias("vec"),
-                F.expr(dots).alias("_dots"),
-            )
-            .withColumn("_bucket", F.expr(bucket))
-            .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
-        )
-    touched = fresh.select("partition").distinct()
-    old_members = index.nodes.join(F.broadcast(touched), "partition").select(
+    touched = F.broadcast(fresh.select("partition").distinct())
+    old_members = index.nodes.join(touched, "partition").select(
         "partition", "id", "vec", "deleted"
     )
     # tombstoned members stay out of the rebuilt graphs — the routed
@@ -586,58 +468,11 @@ def append_routed(
         .select("partition", "id", "vec")
         .unionByName(fresh)
     )
-
-    def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
-        idx = LocalHNSW(pickled)
-        idx.add_batch(
-            pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(pdf["vec"]), dtype=np.float32),
-        )
-        layer, s, t = idx.edges()
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(layer), part, dtype=np.int32),
-                "layer": layer,
-                "src": s,
-                "dst": t,
-                "entry_point": np.full(len(layer), idx.ids[idx.entry_point], dtype=np.int64),
-                "max_layer": np.full(len(layer), idx.max_layer, dtype=np.int32),
-            }
-        )
-
-    rebuilt_raw = members.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
-    ).transform(persist_tracked)
-    rebuilt_edges = rebuilt_raw.select("partition", "layer", "src", "dst")
-    rebuilt_meta = rebuilt_raw.groupBy("partition").agg(
-        F.first("entry_point").alias("entry_point"),
-        F.first("max_layer").alias("max_layer"),
-        F.countDistinct("src").alias("n_nodes"),
-    )
-    from .build import _level_expr
-
-    rebuilt_nodes = members.select(
-        "partition",
-        "id",
-        "vec",
-        _level_expr(F.col("id"), pickled).alias("level"),
-        F.lit(False).alias("deleted"),
-    )
-    keep_nodes = index.nodes.join(F.broadcast(touched), "partition", "left_anti")
-    keep_edges = index.edges.join(F.broadcast(touched), "partition", "left_anti")
-    keep_meta = index.meta.join(F.broadcast(touched), "partition", "left_anti")
-    return HnswIndex(
-        keep_nodes.unionByName(rebuilt_nodes),
-        keep_edges.unionByName(rebuilt_edges),
-        keep_meta.unionByName(rebuilt_meta),
-        params,
-        num_partitions=index.num_partitions,
-        appended_partitions=index.appended_partitions,
-        routed=True,
-        n_planes=index.n_planes,
-        replicas=replicas,
-        routing=routing,
-        assign_n=getattr(index, "assign_n", 2),
-        centroids=getattr(index, "centroids", None),
+    nodes, edges, meta, kernel_out = _build_tables(members, index.params)
+    keep = lambda df: df.join(touched, "partition", "left_anti")  # noqa: E731
+    return index._with_tables(
+        nodes=keep(index.nodes).unionByName(nodes),
+        edges=keep(index.edges).unionByName(edges),
+        meta=keep(index.meta).unionByName(meta),
+        kernel_out=kernel_out,
     )

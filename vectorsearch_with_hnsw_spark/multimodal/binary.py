@@ -28,6 +28,7 @@ unchanged).
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -218,12 +219,14 @@ def resize_image(blobs: DataFrame, id_col: str = "img_id", payload_col: str = "p
 # Broadcast-weights model inference (the ResNet-shaped path, numpy-only)
 # ---------------------------------------------------------------------------
 
-# per-worker model cache, keyed by broadcast id: the numpy analog of
-# loading a torch state_dict once per executor process — NOT once per
-# batch and never once per row. mapInPandas kernels are re-invoked per
-# task; this cache makes repeated tasks on the same worker reuse the
-# already-materialized weights.
-_MODEL_CACHE: dict[int, np.ndarray] = {}
+# per-worker model cache, keyed by the broadcast object: the numpy
+# analog of loading a torch state_dict once per executor process — NOT
+# once per batch and never once per row. mapInPandas kernels are
+# re-invoked per task; this cache makes repeated tasks on the same
+# worker reuse the already-materialized weights. Weak keys, because a
+# worker-side Broadcast carries no id: an entry dies with its broadcast,
+# so a later broadcast at a reused address never reads stale weights.
+_MODEL_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 EMBED_DIM = 8
 
@@ -250,12 +253,11 @@ def make_projection_weights(
 
 def _load_model(bc) -> np.ndarray:
     """Lazy per-executor init: materialize the broadcast weights once
-    per worker process and cache by broadcast id."""
-    key = getattr(bc, "id", None) or id(bc)
-    w = _MODEL_CACHE.get(key)
+    per worker process and cache them per broadcast."""
+    w = _MODEL_CACHE.get(bc)
     if w is None:
         w = np.ascontiguousarray(np.asarray(bc.value, dtype=np.int64))
-        _MODEL_CACHE[key] = w
+        _MODEL_CACHE[bc] = w
     return w
 
 
